@@ -19,7 +19,7 @@ All inner math is vectorized numpy over Arrow batches — no per-row Python.
 """
 
 from .config import HyperSketchConfig
-from .session import get_session, session_builder
+from .session import get_session, install_zip_directory_reuse, session_builder
 from .sketches.cms import CountMinSketch
 from .sketches.hll import HyperLogLog
 from .sketches.bloom import BloomFilter
@@ -27,6 +27,9 @@ from .sketches.kll import KLL
 from .sketches.tdigest import TDigest
 
 __version__ = "0.1.0"
+
+# every Python worker that unpickles an engine closure imports this package
+install_zip_directory_reuse()
 
 __all__ = [
     "get_session",

@@ -55,7 +55,8 @@ from .sketch_build import build_sketch_checkpointed, build_sketch_distributed
 #: init once — reused workers otherwise re-decompress + re-widen the same
 #: parity-width table, ~25 ms per task at w=272k).  Keyed by a blake2b of
 #: the blob bytes, so only byte-identical payloads ever share an entry;
-#: entries are READ-ONLY by contract (estimate-only callers).  Bounded to
+#: entries are frozen (table not writeable), so a stray update raises
+#: instead of corrupting every other task's estimates.  Bounded to
 #: a handful of sketches; lives in an importable module so worker reuse
 #: (spark.python.worker.reuse) keeps it across tasks and jobs.
 _DECODED_CMS_CACHE: dict = {}
@@ -72,7 +73,9 @@ def _decode_cms_cached(blob: bytes) -> CountMinSketch:
     if sk is None:
         while len(_DECODED_CMS_CACHE) >= _DECODED_CMS_CACHE_MAX:
             _DECODED_CMS_CACHE.pop(next(iter(_DECODED_CMS_CACHE)))
-        sk = _DECODED_CMS_CACHE[key] = _fb(blob)
+        sk = _fb(blob)
+        sk.table.setflags(write=False)
+        _DECODED_CMS_CACHE[key] = sk
     return sk
 
 

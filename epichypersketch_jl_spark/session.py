@@ -17,6 +17,8 @@ Everything here is a default — any user-provided conf wins.
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -46,6 +48,46 @@ def apply_malloc_tuning(env: dict | None = None) -> None:
     target = os.environ if env is None else env
     for k, v in MALLOC_TUNING.items():
         target.setdefault(k, v)
+
+
+#: The stdlib zipimporter.invalidate_caches: re-reads the archive's whole
+#: central directory on every call.
+_EAGER_ZIP_INVALIDATE = zipimport.zipimporter.invalidate_caches
+#: archive path -> (st_mtime_ns, st_size, st_ino) when its directory was read.
+_ZIP_STAMPS: dict = {}
+
+
+def _reuse_zip_directory(self) -> None:
+    """zipimporter.invalidate_caches that re-reads the archive's directory
+    only when the archive changed since the last read.  One stamp per
+    archive path, so the many importers of one archive (a pyspark.zip on
+    sys.path gets one per package prefix) share a single read."""
+    try:
+        st = os.stat(self.archive)
+        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+    except OSError:
+        stamp = None
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if stamp is not None and files is not None and _ZIP_STAMPS.get(self.archive) == stamp:
+        self._files = files
+        return
+    _EAGER_ZIP_INVALIDATE(self)  # stat before the read: a change in between re-reads next time
+    _ZIP_STAMPS[self.archive] = stamp
+
+
+def install_zip_directory_reuse() -> None:
+    """Stop a PySpark worker from re-reading every zip on sys.path per task.
+
+    pyspark.worker_util.setup_spark_files calls importlib.invalidate_caches()
+    on every task, and on CPython 3.11/3.12 each zipimporter then re-reads
+    its archive's central directory: a worker holds ~16 of them (pyspark.zip,
+    py4j, the spark-core jar), 54-92 ms of CPU per task on a 4-core VM.
+    Applies only inside a PySpark worker process and only where the stdlib
+    reads eagerly (3.13's zipimporter has _get_files and is already lazy)."""
+    zi = zipimport.zipimporter
+    if "pyspark.worker" not in sys.modules or hasattr(zi, "_get_files"):
+        return
+    zi.invalidate_caches = _reuse_zip_directory
 
 
 def session_builder(

@@ -242,6 +242,10 @@ class CountMinSketch(MergeableSketch):
         vmax: int | None = None,
     ) -> None:
         """Add `counts[i]` (default 1) occurrences of each key row."""
+        if not self.table.flags.writeable:
+            # checked here: on numpy 1.26 ufunc.at (the sparse and
+            # conservative paths below) ignores the writeable flag
+            raise ValueError("CountMinSketch table is read-only (a shared, frozen sketch)")
         keys = np.asarray(keys)
         if keys.ndim == 1:
             keys = keys[:, None]

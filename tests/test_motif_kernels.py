@@ -396,6 +396,21 @@ class TestMultisetFold:
             got = {tuple(kk): int(cc) for kk, cc in zip(keys, cnt)}
             assert got == dict(ref), (trial, k, V)
 
+    def test_k1_respects_sliced_offsets_window(self):
+        """A sliced Arrow list column keeps absolute offsets (offsets[0] > 0)
+        and values outside the window in its buffer; the k=1 fold must count
+        only the rows in the slice."""
+        from collections import Counter
+
+        from epichypersketch_jl_spark.functions.motif_kernels import multiset_fold
+
+        arr = pa.array([[7, 7], [1, 2], [2, 3, 3], [5, 6]], type=pa.list_(pa.int32()))
+        flat, off = list_column_to_numpy(arr.slice(1, 2))
+        assert off[0] > 0 and off[-1] < len(flat)
+        keys, cnt = multiset_fold(flat, off, 1, int(flat.max()))
+        got = {int(kk[0]): int(cc) for kk, cc in zip(keys, cnt)}
+        assert got == dict(Counter([1, 2, 2, 3, 3]))
+
     def test_kernel_paths_identical(self, monkeypatch):
         """build_batch/aggregate_batch produce byte-identical sketches and
         aggregates with the counting path on and off (EHS_DISABLE_MSFOLD)."""

@@ -174,3 +174,24 @@ class TestRound3ReviewFixes:
         df = spark.createDataFrame([], "value: long").filter("value > 0")
         out = hll_distinct(df, "value").toPandas()
         assert len(out) == 1 and out.approx_distinct.iloc[0] == 0
+
+
+class TestDecodedCMSCacheFrozen:
+    def test_update_on_cached_sketch_raises(self, monkeypatch):
+        """A worker's decoded-broadcast cache hands one CountMinSketch to
+        every task; writing to it must raise, not corrupt the estimates
+        other tasks read."""
+        from epichypersketch_jl_spark.operators import motif
+
+        monkeypatch.setattr(motif, "_DECODED_CMS_CACHE", {})
+        cms = CountMinSketch(delta=0.01, epsilon=0.01, key_width=2, seed=3)
+        keys = np.array([[1, 2], [3, 4], [1, 2]], dtype=np.int64)
+        cms.update_batch(keys)
+        blob = cms.to_bytes()
+        cached = motif._decode_cms_cached(blob)
+        before = cached.estimate(keys).copy()
+        with pytest.raises(ValueError, match="read-only"):
+            cached.update_batch(keys)
+        again = motif._decode_cms_cached(blob)
+        assert again is cached
+        assert np.array_equal(again.estimate(keys), before)
