@@ -1631,20 +1631,13 @@ def q_count_sketch_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     including its collision error."""
     import numpy as np
 
-    from .operators.sketch_build import build_sketch_distributed
+    from .operators.sketch_build import build_sketch_distributed, value_column_update
     from .sketches.countsketch import CountSketch
 
     seq = _seq(spark, sf_dir)
     src = seq.select(F.explode("tokens").alias("v"))
-
-    def update(sk: CountSketch, batch, stats: dict) -> None:
-        vals = batch.column("v").to_numpy(zero_copy_only=False)
-        sk.update_batch(vals)
-        stats["n_rows"] += batch.num_rows
-        stats["n_updates"] += len(vals)
-
     cs, _ = build_sketch_distributed(
-        src, lambda: CountSketch(width=CS_W, depth=CS_D), update
+        src, lambda: CountSketch(width=CS_W, depth=CS_D), value_column_update(src, "v")
     )
     rows = src.groupBy("v").agg(F.count("*").alias("exact_c")).collect()
     toks = np.array([r.v for r in rows], dtype=np.int64)
@@ -1667,18 +1660,12 @@ def q_count_sketch_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the difference table."""
     import numpy as np
 
-    from .operators.sketch_build import build_sketch_distributed
+    from .operators.sketch_build import build_sketch_distributed, value_column_update
     from .sketches.countsketch import CountSketch
 
     seq = _seq(spark, sf_dir)
     tok = seq.select(F.col("doc_id"), F.explode("tokens").alias("v"))
-
-    def update(sk: CountSketch, batch, stats: dict) -> None:
-        vals = batch.column("v").to_numpy(zero_copy_only=False)
-        sk.update_batch(vals)
-        stats["n_rows"] += batch.num_rows
-        stats["n_updates"] += len(vals)
-
+    update = value_column_update(tok, "v")
     mk = lambda: CountSketch(width=CS_W, depth=CS_D)
     cs_a, _ = build_sketch_distributed(
         tok.where(F.col("doc_id") % 2 == 0).select("v"), mk, update

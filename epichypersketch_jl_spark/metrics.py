@@ -48,11 +48,3 @@ def write_run_log(
     with open(path, "a") as f:
         f.write(json.dumps(rec) + "\n")
     return path
-
-
-def read_run_log(log_dir: str) -> list[dict]:
-    path = os.path.join(log_dir, "runs.jsonl")
-    if not os.path.exists(path):
-        return []
-    with open(path) as f:
-        return [json.loads(ln) for ln in f if ln.strip()]

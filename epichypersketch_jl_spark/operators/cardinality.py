@@ -15,53 +15,18 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from ..functions.hashing import hash64
 from ..functions.motif_kernels import list_column_to_numpy
 from ..sketches.base import from_bytes
 from ..sketches.bloom import BloomFilter
 from ..sketches.hll import HyperLogLog
-
-_BLOB_SCHEMA = StructType(
-    [
-        StructField("group", StringType(), False),
-        StructField("sketch", BinaryType(), False),
-    ]
+from .sketch_build import (
+    GROUP_BLOB_SCHEMA,
+    _GROUP_BLOB_ARROW,
+    build_sketch_distributed,
+    value_column_update,
 )
-_BLOB_ARROW = pa.schema([("group", pa.string()), ("sketch", pa.binary())])
-
-
-def _reduce_sketch(df: DataFrame, value_col: str, zero_fn, update_fn, is_list: bool):
-    """Single-sketch reduction: one mapInArrow pass emitting ONE blob per
-    task (fixed-size, never row data), merged associatively on the driver.
-    Grouped builds go through _hll_grouped, which shuffles sparse blobs by
-    group and merges executor-side instead."""
-    src = df.select(value_col)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sk = None
-        for batch in batches:
-            if is_list:
-                flat, _offsets = list_column_to_numpy(batch.column(value_col))
-            else:
-                flat = batch.column(value_col).to_numpy(zero_copy_only=False)
-            if sk is None:
-                sk = zero_fn()
-            update_fn(sk, flat)
-        if sk is not None:
-            yield pa.RecordBatch.from_pydict(
-                {"group": ["__all__"], "sketch": [sk.to_bytes()]},
-                schema=_BLOB_ARROW,
-            )
-
-    rows = src.mapInArrow(fn, _BLOB_SCHEMA).collect()
-    merged = None
-    for r in rows:
-        sk = from_bytes(bytes(r.sketch))
-        merged = sk if merged is None else merged.merge(sk)
-    return merged if merged is not None else zero_fn()
-
 
 def _task_group_codes(
     tid_of: dict[str, int], names: list[str], gcol: pa.Array
@@ -166,18 +131,18 @@ def _hll_grouped(
             out_blobs.append(frame_sparse(p, seed, iu[s:e], rmax[s:e]))
             if len(out_names) == 4096:
                 yield pa.RecordBatch.from_pydict(
-                    {"group": out_names, "sketch": out_blobs}, schema=_BLOB_ARROW
+                    {"group": out_names, "sketch": out_blobs}, schema=_GROUP_BLOB_ARROW
                 )
                 out_names, out_blobs = [], []
         if out_names:
             yield pa.RecordBatch.from_pydict(
-                {"group": out_names, "sketch": out_blobs}, schema=_BLOB_ARROW
+                {"group": out_names, "sketch": out_blobs}, schema=_GROUP_BLOB_ARROW
             )
 
     # hash-partition the (task, group) sparse blobs so each group lands
     # wholly in one partition, then merge + estimate vectorized per
     # partition — no per-group Python function calls, no driver collect
-    blobs = src.mapInArrow(fn, _BLOB_SCHEMA).repartition(F.col("group"))
+    blobs = src.mapInArrow(fn, GROUP_BLOB_SCHEMA).repartition(F.col("group"))
 
     def merge_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tid_of: dict[str, int] = {}
@@ -231,21 +196,21 @@ def hll_distinct(
     """Approximate distinct count of value_col (scalar or array element),
     overall or per group.  Returns (group?, approx_distinct: long);
     ungrouped, an empty input is one row with 0 (|distinct({})| = 0)."""
-    is_list = df.schema[value_col].dataType.typeName() == "array"
-
     if group_col is not None:
+        is_list = df.schema[value_col].dataType.typeName() == "array"
         return _hll_grouped(df, value_col, group_col, p, seed, is_list).orderBy(
             group_col
         )
 
-    def update(sk: HyperLogLog, vals: np.ndarray) -> None:
-        sk.update_batch(vals)
-
-    sk = _reduce_sketch(
-        df, value_col, lambda: HyperLogLog(p=p, seed=seed), update, is_list
+    sk, _ = build_sketch_distributed(
+        df.select(value_col),
+        lambda: HyperLogLog(p=p, seed=seed),
+        value_column_update(df, value_col),
     )
+    # an Arrow table, not Python rows: no Python stage for a one-row answer
     return df.sparkSession.createDataFrame(
-        [(int(round(sk.estimate())),)], schema="approx_distinct: long"
+        pa.table({"approx_distinct": [int(round(sk.estimate()))]}),
+        schema="approx_distinct: long",
     )
 
 
@@ -502,18 +467,12 @@ def build_bloom(
     seed: int = 42,
 ) -> BloomFilter:
     """Distributed Bloom build over a scalar column; merge = OR."""
-    is_list = df.schema[value_col].dataType.typeName() == "array"
-
-    def update(sk: BloomFilter, vals: np.ndarray) -> None:
-        sk.update_batch(vals)
-
-    return _reduce_sketch(
-        df,
-        value_col,
+    sk, _ = build_sketch_distributed(
+        df.select(value_col),
         lambda: BloomFilter(n_expected=n_expected, fpp=fpp, seed=seed),
-        update,
-        is_list,
+        value_column_update(df, value_col),
     )
+    return sk
 
 
 def build_kmv_bloom(
@@ -531,18 +490,12 @@ def build_kmv_bloom(
     a DuckDB oracle in pure integer SQL."""
     from ..sketches.bloom import KmvBloom
 
-    is_list = df.schema[value_col].dataType.typeName() == "array"
-
-    def update(sk, vals: np.ndarray) -> None:
-        sk.update_batch(vals)
-
-    return _reduce_sketch(
-        df,
-        value_col,
+    sk, _ = build_sketch_distributed(
+        df.select(value_col),
         lambda: KmvBloom(n_bits=n_bits, n_hashes=n_hashes),
-        update,
-        is_list,
+        value_column_update(df, value_col),
     )
+    return sk
 
 
 def bloom_fp_audit(
@@ -629,7 +582,6 @@ def build_cms_over_column(
     frequency companion to build_bloom.  Same map-only build + associative
     merge as the motif pipeline."""
     from ..sketches.cms import CountMinSketch
-    from .sketch_build import build_sketch_distributed
 
     is_list = df.schema[value_col].dataType.typeName() == "array"
 

@@ -236,7 +236,7 @@ def enriched_configurations(
 #: counts) on the fused single-scan summary path; a task whose folded key
 #: set serializes past this reports no partial and the query falls back to
 #: the classic second aggregation pass.  Bounds driver fan-in bytes at
-#:   min(#tasks, collect_threshold) * cap.
+#:   sketch_build._COLLECT_MAX_TASKS * cap.
 FUSED_PARTIAL_MAX_BYTES = 2 << 20
 
 
@@ -249,40 +249,20 @@ def _fused_summary_collect(
 
     Returns (merged sketch, partial rows | None); None when any task
     could not supply partials (enumeration fallback engaged, or the
-    partial exceeded FUSED_PARTIAL_MAX_BYTES) — the caller then runs the
-    classic second pass against the merged sketch, so the fallback costs
-    exactly what the unfused plan costs.
+    partial exceeded FUSED_PARTIAL_MAX_BYTES) or when the task count put
+    the reduction in the treeReduce regime, which returns no partials —
+    the caller then runs the classic second pass against the merged
+    sketch, so the fallback costs exactly what the unfused plan costs.
     """
     import struct as _struct
 
     from ..functions.motif_kernels import multiset_fold, _value_bound, _fold_keys
-    from .sketch_build import _BLOB_ARROW_SCHEMA
+    from .sketch_build import _reduce
 
     k = cfg.motif_size
     tok_col = cfg.tokens_col
-    fused_arrow_schema = pa.schema(
-        list(_BLOB_ARROW_SCHEMA) + [("partial", pa.binary())]
-    )
-    from pyspark.sql.types import BinaryType
 
-    fused_schema = StructType(
-        [
-            StructField("part_id", IntegerType(), False),
-            StructField("sketch", BinaryType(), False),
-            StructField("n_rows", LongType(), False),
-            StructField("n_tokens", LongType(), False),
-            StructField("n_updates", LongType(), False),
-            StructField("wall_ms", DoubleType(), False),
-            StructField("partial", BinaryType(), True),
-        ]
-    )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import time as _time
-
-        from pyspark import TaskContext
-
-        t0 = _time.monotonic()
+    def task(batches: Iterator[pa.RecordBatch]) -> tuple[CountMinSketch, dict]:
         sk = make_cms(cfg, False)
         n_rows = n_tokens = 0
         acc_k: list[np.ndarray] = []
@@ -317,30 +297,15 @@ def _fused_summary_collect(
                 partial = blob
         elif fold_ok:
             partial = _struct.pack("<qi", 0, k)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        yield pa.RecordBatch.from_pydict(
-            {
-                "part_id": [pid],
-                "sketch": [sk.to_bytes()],
-                "n_rows": [n_rows],
-                "n_tokens": [n_tokens],
-                "n_updates": [sk.n_updates],
-                "wall_ms": [(_time.monotonic() - t0) * 1000.0],
-                "partial": [partial],
-            },
-            schema=fused_arrow_schema,
-        )
+        return sk, {
+            "n_rows": n_rows,
+            "n_tokens": n_tokens,
+            "n_updates": sk.n_updates,
+            "partial": partial,
+        }
 
-    rows = prepared.mapInArrow(fn, fused_schema).collect()
-    from ..sketches.base import from_bytes as _fb
-
-    if not rows:
-        return make_cms(cfg, False), []
-    sk = _fb(bytes(rows[0].sketch))
-    sk.merge_blobs_inplace(bytes(r.sketch) for r in rows[1:])
-    partials = [r.partial for r in rows]
-    if any(p is None for p in partials):
+    sk, _, partials = _reduce(prepared, task)
+    if partials is None or any(p is None for p in partials):
         return sk, None
     return sk, [bytes(p) for p in partials]
 
@@ -444,24 +409,13 @@ def motif_counts(
         # finishes the aggregation over a few thousand folded rows.
         # Results are identical to the two-pass plan (pytest-pinned);
         # tasks that fall back to enumeration (large alphabet) or exceed
-        # the partial byte cap degrade gracefully to the classic second
-        # pass against the already-merged sketch.
+        # the partial byte cap, and builds past the collect regime's task
+        # count, degrade gracefully to the classic second pass against the
+        # already-merged sketch.
         prepared = _prepared(df, cfg, conv=False, with_weights=False)
-        # the fused path collects one (blob, partial) row per task; beyond
-        # the classic collect threshold the blobs go through treeReduce
-        # instead, so keep the fused plan to the same fan-in regime.  The
-        # partition probe (.rdd conversion, ~0.1 s) is memoized per plan —
-        # the same session-level memo _seq uses.
-        spark = df.sparkSession
-        memo = spark.__dict__.setdefault("_ehs_nparts_memo", {})
-        pkey = ("prepared", prepared.semanticHash())
-        n_parts = memo.get(pkey)
-        if n_parts is None:
-            n_parts = memo[pkey] = prepared.rdd.getNumPartitions()
-        if n_parts <= 256:
-            cms, partials = _fused_summary_collect(prepared, cfg)
-            if partials is not None:
-                return _fused_summary_result(df, cfg, cms, partials)
+        cms, partials = _fused_summary_collect(prepared, cfg)
+        if partials is not None:
+            return _fused_summary_result(df, cfg, cms, partials)
     if cms is None:
         cms, _ = build_motif_cms(df, cfg)
     spark = df.sparkSession

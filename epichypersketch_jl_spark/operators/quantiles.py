@@ -10,33 +10,22 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.motif_kernels import list_column_to_numpy
 from ..sketches.base import from_bytes
 from ..sketches.kll import KLL
 from ..sketches.tdigest import TDigest
-from .sketch_build import build_sketch_distributed
-
-
-def _numeric_update(value_col: str, is_list: bool):
-    def update(sk, batch: pa.RecordBatch, stats: dict) -> None:
-        if is_list:
-            vals, _ = list_column_to_numpy(batch.column(value_col))
-        else:
-            vals = batch.column(value_col).to_numpy(zero_copy_only=False)
-        sk.update_batch(vals)
-        stats["n_rows"] += batch.num_rows
-        stats["n_updates"] += len(vals)
-
-    return update
+from .sketch_build import (
+    GROUP_BLOB_SCHEMA,
+    _GROUP_BLOB_ARROW,
+    build_sketch_distributed,
+    value_column_update,
+)
 
 
 def kll_quantiles(
     df: DataFrame, value_col: str, quantiles: list[float], *, k: int = 200, seed: int = 42
 ) -> dict[float, float]:
-    is_list = df.schema[value_col].dataType.typeName() == "array"
-    src = df.select(value_col)
     sk, _ = build_sketch_distributed(
-        src, lambda: KLL(k=k, seed=seed), _numeric_update(value_col, is_list)
+        df.select(value_col), lambda: KLL(k=k, seed=seed), value_column_update(df, value_col)
     )
     vals = sk.quantile(np.array(quantiles))
     return {q: float(v) for q, v in zip(quantiles, vals)}
@@ -70,7 +59,6 @@ def _grouped_build_fn(zero_fn, map_groups_budget: int):
         tid_of: dict[str, int] = {}
         names: list[str] = []
         sketches: dict = {}
-        arrow_schema = pa.schema([("group", pa.string()), ("sketch", pa.binary())])
 
         def _emit() -> pa.RecordBatch:
             rb = pa.RecordBatch.from_pydict(
@@ -78,7 +66,7 @@ def _grouped_build_fn(zero_fn, map_groups_budget: int):
                     "group": [names[t] for t in sketches],
                     "sketch": [sk.to_bytes() for sk in sketches.values()],
                 },
-                schema=arrow_schema,
+                schema=_GROUP_BLOB_ARROW,
             )
             tid_of.clear()
             names.clear()
@@ -106,6 +94,26 @@ def _grouped_build_fn(zero_fn, map_groups_budget: int):
             yield _emit()
 
     return build
+
+
+def _merge_groups(
+    batches: Iterator[pa.RecordBatch], compat_fn, op_name: str
+) -> dict:
+    """Per-partition merge of GROUP_BLOB_SCHEMA rows: group name -> merged
+    sketch.  The grouped exchange puts every blob of a group in one
+    partition, so each group's sketch here is final."""
+    merged: dict = {}
+    for batch in batches:
+        for name, blob in zip(
+            batch.column("group").to_pylist(),
+            batch.column("sketch").to_pylist(),
+        ):
+            sk = from_bytes(bytes(blob))
+            if not compat_fn(sk):
+                raise ValueError(f"mixed sketch parameters in {op_name} merge")
+            prev = merged.get(name)
+            merged[name] = sk if prev is None else prev.merge(sk)
+    return merged
 
 
 def _quantiles_grouped(
@@ -154,22 +162,12 @@ def _quantiles_grouped(
     qs = sorted(float(q) for q in quantiles)
     src = _grouped_src(df, value_col, group_col)
     blobs = src.mapInArrow(
-        _grouped_build_fn(zero_fn, map_groups_budget), "group string, sketch binary"
+        _grouped_build_fn(zero_fn, map_groups_budget), GROUP_BLOB_SCHEMA
     ).repartition(F.col("group"))
     qarr = np.array(qs)
 
     def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        merged: dict = {}
-        for batch in batches:
-            for name, blob in zip(
-                batch.column("group").to_pylist(),
-                batch.column("sketch").to_pylist(),
-            ):
-                sk = from_bytes(bytes(blob))
-                if not compat_fn(sk):
-                    raise ValueError(f"mixed sketch parameters in {op_name} merge")
-                prev = merged.get(name)
-                merged[name] = sk if prev is None else prev.merge(sk)
+        merged = _merge_groups(batches, compat_fn, op_name)
         if not merged:
             return
         out_g: list[str] = []
@@ -195,10 +193,10 @@ def _quantiles_grouped(
 def tdigest_quantiles(
     df: DataFrame, value_col: str, quantiles: list[float], *, compression: float = 200.0
 ) -> dict[float, float]:
-    is_list = df.schema[value_col].dataType.typeName() == "array"
-    src = df.select(value_col)
     sk, _ = build_sketch_distributed(
-        src, lambda: TDigest(compression=compression), _numeric_update(value_col, is_list)
+        df.select(value_col),
+        lambda: TDigest(compression=compression),
+        value_column_update(df, value_col),
     )
     vals = sk.quantile(np.array(quantiles))
     return {q: float(v) for q, v in zip(quantiles, vals)}
@@ -284,36 +282,26 @@ def percentile_rank(
 
     Rows with NULL values get a NULL percentile; estimates carry the KLL
     rank-error bound (|est - exact| <= ~0.03 of n_group at k=200)."""
-    from ..sketches.kll import KLL
-
     src = _grouped_src(df, value_col, group_col)
     blobs = src.mapInArrow(
         _grouped_build_fn(lambda: KLL(k=k, seed=seed), map_groups_budget),
-        "group string, sketch binary",
+        GROUP_BLOB_SCHEMA,
     ).repartition(F.col("group"))
 
     def merge_one(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        merged: dict = {}
-        for batch in batches:
-            for name, blob in zip(
-                batch.column("group").to_pylist(),
-                batch.column("sketch").to_pylist(),
-            ):
-                sk = from_bytes(bytes(blob))
-                if not isinstance(sk, KLL) or sk.k != k:
-                    raise ValueError("mixed KLL parameters in percentile_rank merge")
-                prev = merged.get(name)
-                merged[name] = sk if prev is None else prev.merge(sk)
+        merged = _merge_groups(
+            batches, lambda sk: isinstance(sk, KLL) and sk.k == k, "percentile_rank"
+        )
         if merged:
             yield pa.RecordBatch.from_pydict(
                 {
                     "group": list(merged),
                     "sketch": [sk.to_bytes() for sk in merged.values()],
                 },
-                schema=pa.schema([("group", pa.string()), ("sketch", pa.binary())]),
+                schema=_GROUP_BLOB_ARROW,
             )
 
-    merged = blobs.mapInArrow(merge_one, "group string, sketch binary")
+    merged = blobs.mapInArrow(merge_one, GROUP_BLOB_SCHEMA)
 
     gkey, skey = "__ehs_pr_group", "__ehs_pr_sketch"
     joined = df.withColumn(

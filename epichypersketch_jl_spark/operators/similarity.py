@@ -23,7 +23,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, IntegerType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 
 def _vectors_matrix(col: "pa.Array", dim: int | None) -> tuple["np.ndarray", int]:
@@ -443,33 +443,19 @@ def fd_sketch(
     """Distributed Frequent Directions build over an embedding column
     (sketches/fd.py): each task folds its rows into an l x d partial
     sketch inside mapInArrow, one fixed-size blob per task crosses the
-    wire, and the blobs tree-merge on the driver — the same plan shape as
-    every other family member, so a 100-TB embedding table costs one scan
-    and ships tasks x (l*d*8) bytes."""
-    from ..sketches.base import from_bytes as _fb
+    wire, and the blobs merge through build_sketch_distributed — the same
+    plan shape as every other family member, so a 100-TB embedding table
+    costs one scan and ships tasks x (l*d*8) bytes."""
     from ..sketches.fd import FrequentDirections
+    from .sketch_build import build_sketch_distributed
 
-    src = emb.select(vec_col)
-    out_schema = StructType([StructField("sketch", BinaryType(), False)])
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sk = None
-        dim = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            mat, dim = _vectors_matrix(batch.column(vec_col), dim)
-            if sk is None:
-                sk = FrequentDirections(l=l)
+    def update(sk: FrequentDirections, batch: pa.RecordBatch, stats: dict) -> None:
+        if batch.num_rows:
+            mat, _ = _vectors_matrix(batch.column(vec_col), sk.dim)
             sk.update_batch(mat)
-        if sk is not None:
-            yield pa.RecordBatch.from_pydict(
-                {"sketch": [sk.to_bytes()]}, schema=pa.schema([("sketch", pa.binary())])
-            )
+            stats["n_rows"] += batch.num_rows
 
-    rows = src.mapInArrow(fn, out_schema).collect()
-    merged = None
-    for r in rows:
-        sk = _fb(bytes(r.sketch))
-        merged = sk if merged is None else merged.merge(sk)
-    return merged if merged is not None else FrequentDirections(l=l)
+    sk, _ = build_sketch_distributed(
+        emb.select(vec_col), lambda: FrequentDirections(l=l), update
+    )
+    return sk

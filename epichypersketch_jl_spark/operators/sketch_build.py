@@ -1,5 +1,5 @@
 """Distributed sketch build: partition-local numpy build inside mapInArrow,
-then an associative tree merge of serialized blobs.
+then an associative merge of serialized blobs.
 
 This is the Spark-native replacement for the reference's implicit merge
 (all batches/partitions mutate ONE shared sketch object sequentially,
@@ -14,10 +14,19 @@ explicit `+` over seed-aligned sketches is what buys:
   * resumability: with a checkpoint dir, per-bucket blobs are persisted and
     completed buckets are skipped on re-run (north_rule requirement).
 
-Scale notes (1000-executor / 100 TB): the build is map-only; the reduction is
-`treeReduce` over ~#tasks blobs with depth 2 (fan-in ~sqrt(tasks)); the
-checkpointed path shuffles only (bucket, row) once and writes blobs, so a
-resume re-reads no completed input.
+`build_sketch_distributed` is the one path every sketch family's global
+build takes (motif CMS, HLL, Bloom, KmvBloom, CMS over a column,
+CountSketch, KLL, t-digest, Frequent Directions; the fused motif scan
+shares its private `_reduce`).  Every task emits one row of
+`BLOB_SCHEMA` — its sketch, even the zero sketch of a task that read no
+rows — and the rows reduce in ONE Spark job: collected and merged on the
+driver up to `_COLLECT_MAX_TASKS` tasks, `treeReduce`d (depth 2, fan-in
+~sqrt(tasks)) beyond it, so the driver receives one blob at any task
+count.  Every merge goes through `MergeableSketch.merge_blobs`.  The
+grouped builds (operators/cardinality, operators/quantiles) merge per
+group executor-side instead; the checkpointed path shuffles only
+(bucket, row) once and writes blobs, so a resume re-reads no completed
+input.
 """
 
 from __future__ import annotations
@@ -26,7 +35,6 @@ import time
 from typing import Callable, Iterator
 
 import pyarrow as pa
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -38,10 +46,19 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.motif_kernels import list_column_to_numpy
 from ..sketches.base import MergeableSketch, from_bytes
 
 # update_fn(sketch, record_batch, stats_dict) -> None; mutates sketch in place.
 UpdateFn = Callable[[MergeableSketch, pa.RecordBatch, dict], None]
+# task_fn(batches) -> (sketch, stats): one task's whole build.  stats may
+# carry n_rows / n_tokens / n_updates and a `partial` payload (bytes|None).
+TaskFn = Callable[[Iterator[pa.RecordBatch]], tuple[MergeableSketch, dict]]
+
+#: above this many tasks the blobs treeReduce instead of being collected
+_COLLECT_MAX_TASKS = 256
+
+_STAT_COLS = ("n_rows", "n_tokens", "n_updates")
 
 _BLOB_ARROW_SCHEMA = pa.schema(
     [
@@ -51,6 +68,7 @@ _BLOB_ARROW_SCHEMA = pa.schema(
         ("n_tokens", pa.int64()),
         ("n_updates", pa.int64()),
         ("wall_ms", pa.float64()),
+        ("partial", pa.binary()),
     ]
 )
 
@@ -62,95 +80,115 @@ BLOB_SCHEMA = StructType(
         StructField("n_tokens", LongType(), False),
         StructField("n_updates", LongType(), False),
         StructField("wall_ms", DoubleType(), False),
+        StructField("partial", BinaryType(), True),
     ]
 )
 
-
-def merge_blob_bytes(a: bytes, b: bytes) -> bytes:
-    sk = from_bytes(a)
-    fast = getattr(sk, "merge_blob_inplace", None)
-    if fast is not None:
-        return fast(b).to_bytes()
-    return sk.merge(from_bytes(b)).to_bytes()
+#: per-(task, group) blob rows of the grouped builds
+GROUP_BLOB_SCHEMA = "group string, sketch binary"
+_GROUP_BLOB_ARROW = pa.schema([("group", pa.string()), ("sketch", pa.binary())])
 
 
-def _make_build_fn(zero_fn: Callable[[], MergeableSketch], update_fn: UpdateFn, part_id_fn=None):
+def value_column_update(df: DataFrame, value_col: str) -> UpdateFn:
+    """update_fn feeding one value column of `df` to ``sk.update_batch``:
+    a scalar column as is, an array column as its flattened elements."""
+    is_list = df.schema[value_col].dataType.typeName() == "array"
+
+    def update(sk: MergeableSketch, batch: pa.RecordBatch, stats: dict) -> None:
+        col = batch.column(value_col)
+        if is_list:
+            vals, _ = list_column_to_numpy(col)
+        else:
+            vals = col.to_numpy(zero_copy_only=False)
+        sk.update_batch(vals)
+        stats["n_rows"] += batch.num_rows
+        stats["n_updates"] += len(vals)
+
+    return update
+
+
+def _build_task(zero_fn: Callable[[], MergeableSketch], update_fn: UpdateFn) -> TaskFn:
+    def task(batches: Iterator[pa.RecordBatch]) -> tuple[MergeableSketch, dict]:
+        sk = zero_fn()
+        stats = dict.fromkeys(_STAT_COLS, 0)
+        for b in batches:
+            update_fn(sk, b, stats)
+        return sk, stats
+
+    return task
+
+
+def _task_row(task_fn: TaskFn, batches: Iterator[pa.RecordBatch], part_id: int) -> pa.RecordBatch:
+    """Run one task's build and frame it as its BLOB_SCHEMA row."""
+    t0 = time.monotonic()
+    sk, stats = task_fn(batches)
+    row = {c: [stats.get(c, 0)] for c in _STAT_COLS}
+    row.update(
+        part_id=[part_id],
+        sketch=[sk.to_bytes()],
+        wall_ms=[(time.monotonic() - t0) * 1000.0],
+        partial=[stats.get("partial")],
+    )
+    return pa.RecordBatch.from_pydict(row, schema=_BLOB_ARROW_SCHEMA)
+
+
+def _per_task(task_fn: TaskFn):
+    """mapInArrow function emitting one BLOB_SCHEMA row per task."""
+
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        t0 = time.monotonic()
-        sk = zero_fn()
-        stats = {"n_rows": 0, "n_tokens": 0, "n_updates": 0}
-        for b in batches:
-            update_fn(sk, b, stats)
         ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        yield pa.RecordBatch.from_pydict(
-            {
-                "part_id": [pid],
-                "sketch": [sk.to_bytes()],
-                "n_rows": [stats["n_rows"]],
-                "n_tokens": [stats["n_tokens"]],
-                "n_updates": [stats["n_updates"]],
-                "wall_ms": [(time.monotonic() - t0) * 1000.0],
-            },
-            schema=_BLOB_ARROW_SCHEMA,
-        )
+        yield _task_row(task_fn, batches, ctx.partitionId() if ctx is not None else -1)
 
     return fn
+
+
+def _metrics(row) -> dict:
+    return {k: v for k, v in row.asDict().items() if k not in ("sketch", "partial")}
+
+
+def _merge_rows(rows) -> MergeableSketch:
+    return from_bytes(bytes(rows[0].sketch)).merge_blobs(bytes(r.sketch) for r in rows[1:])
+
+
+def _tree_pair(row) -> tuple[bytes, list[dict]]:
+    return bytes(row.sketch), [_metrics(row)]
+
+
+def _tree_merge(a: tuple[bytes, list], b: tuple[bytes, list]) -> tuple[bytes, list]:
+    return from_bytes(a[0]).merge_blobs([b[0]]).to_bytes(), a[1] + b[1]
+
+
+def _reduce(
+    df: DataFrame, task_fn: TaskFn
+) -> tuple[MergeableSketch, list[dict], list | None]:
+    """Run `task_fn` once per task of `df` and merge the task sketches in
+    one Spark job.  Returns (merged sketch, per-task metrics, partials):
+    the tasks' `partial` stats in task order when the rows were collected
+    (<= _COLLECT_MAX_TASKS tasks), None when they were treeReduced."""
+    rdd = df.mapInArrow(_per_task(task_fn), BLOB_SCHEMA).rdd
+    if rdd.getNumPartitions() <= _COLLECT_MAX_TASKS:
+        rows = rdd.collect()
+        if not rows:
+            return task_fn(iter(()))[0], [], []
+        return _merge_rows(rows), [_metrics(r) for r in rows], [r.partial for r in rows]
+    blob, metrics = rdd.map(_tree_pair).treeReduce(_tree_merge, depth=2)
+    return from_bytes(blob), sorted(metrics, key=lambda m: m["part_id"]), None
 
 
 def build_sketch_distributed(
     df: DataFrame,
     zero_fn: Callable[[], MergeableSketch],
     update_fn: UpdateFn,
-    *,
-    tree_depth: int = 2,
-    collect_threshold: int = 256,
 ) -> tuple[MergeableSketch, list[dict]]:
-    """Fast path: one map-only pass, no shuffle of raw rows.
+    """Fast path: one map-only pass, no shuffle of raw rows, one job.
 
-    Returns (merged sketch, per-task metrics).  One (compressed) blob per
-    input partition.  Merge strategy is adaptive:
-      * small fan-in (local mode, <= collect_threshold partitions): one job,
-        collect blobs, merge driver-side — no extra stages;
-      * large fan-in (real clusters): treeReduce with depth 2, so the driver
-        receives exactly one blob regardless of task count.
-    """
-    out = df.mapInArrow(_make_build_fn(zero_fn, update_fn), BLOB_SCHEMA)
-    n_parts = df.rdd.getNumPartitions()
-    if n_parts <= collect_threshold:
-        rows = out.collect()  # single job
-        if not rows:
-            return zero_fn(), []
-        sk = from_bytes(bytes(rows[0].sketch))
-        # blob-level fast path (CMS): decode straight into the accumulator,
-        # no per-blob widening copy; the bulk variant overlaps decompression
-        # across blobs (threaded — zlib releases the GIL)
-        bulk = getattr(sk, "merge_blobs_inplace", None)
-        fast = getattr(sk, "merge_blob_inplace", None)
-        if bulk is not None:
-            bulk(bytes(r.sketch) for r in rows[1:])
-        else:
-            for r in rows[1:]:
-                if fast is not None:
-                    fast(bytes(r.sketch))
-                elif hasattr(sk, "merge_inplace"):
-                    sk = sk.merge_inplace(from_bytes(bytes(r.sketch)))
-                else:
-                    sk = sk.merge(from_bytes(bytes(r.sketch)))
-        metrics = [{k: v for k, v in r.asDict().items() if k != "sketch"} for r in rows]
-        return sk, metrics
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        blob_rdd = out.select("sketch").rdd.map(lambda r: bytes(r[0]))
-        if blob_rdd.isEmpty():
-            return zero_fn(), []
-        merged_bytes = blob_rdd.treeReduce(merge_blob_bytes, depth=tree_depth)
-        metrics = [r.asDict() for r in out.drop("sketch").collect()]
-    finally:
-        out.unpersist()
-    return from_bytes(merged_bytes), metrics
+    Returns (merged sketch, per-task metrics: part_id, n_rows, n_tokens,
+    n_updates, wall_ms).  Each task folds its batches into ``zero_fn()``
+    with ``update_fn`` and ships one blob; see `_reduce` for the merge."""
+    sk, metrics, _ = _reduce(df, _build_task(zero_fn, update_fn))
+    return sk, metrics
 
 
 def resolve_checkpoint_dir(spark, prefix: str) -> str:
@@ -207,23 +245,11 @@ def build_sketch_checkpointed(
     )
     todo = bucketed.filter(~F.col("__bucket").isin(*done)) if done else bucketed
 
+    task = _build_task(zero_fn, update_fn)
+
     def fn(key: tuple, table: pa.Table) -> pa.Table:
-        t0 = time.monotonic()
-        sk = zero_fn()
-        stats = {"n_rows": 0, "n_tokens": 0, "n_updates": 0}
-        for b in table.drop_columns(["__bucket"]).to_batches():
-            update_fn(sk, b, stats)
-        return pa.table(
-            {
-                "part_id": [int(key[0].as_py())],
-                "sketch": [sk.to_bytes()],
-                "n_rows": [stats["n_rows"]],
-                "n_tokens": [stats["n_tokens"]],
-                "n_updates": [stats["n_updates"]],
-                "wall_ms": [(time.monotonic() - t0) * 1000.0],
-            },
-            schema=_BLOB_ARROW_SCHEMA,
-        )
+        batches = table.drop_columns(["__bucket"]).to_batches()
+        return pa.Table.from_batches([_task_row(task, iter(batches), int(key[0].as_py()))])
 
     if todo.limit(1).count() > 0:
         todo.groupBy("__bucket").applyInArrow(fn, BLOB_SCHEMA).write.mode("append").parquet(
@@ -244,8 +270,4 @@ def build_sketch_checkpointed(
     )
     if not rows:
         return zero_fn(), []
-    sk = from_bytes(bytes(rows[0].sketch))
-    for r in rows[1:]:
-        sk = sk.merge(from_bytes(bytes(r.sketch)))
-    metrics = [{k: v for k, v in r.asDict().items() if k != "sketch"} for r in rows]
-    return sk, metrics
+    return _merge_rows(rows), [_metrics(r) for r in rows]

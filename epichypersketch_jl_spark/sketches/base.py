@@ -4,6 +4,8 @@ Every sketch implements:
     zero-construction (constructor with params + seed)
     update_batch(...)   — vectorized numpy ingest, no per-row Python
     merge(other)        — associative + commutative; partition/order invariant
+    merge_blobs(blobs)  — fold serialized sketches into this one (the one
+                          fan-in hook every reduction calls)
     estimate(...)/query — point or distribution queries
     to_bytes()/from_bytes() — self-describing serialization for shipping
                               through Arrow binary columns and checkpoints
@@ -17,7 +19,7 @@ sharing one sketch object across batches/partitions (src/partition.jl:148).
 from __future__ import annotations
 
 import struct
-from typing import ClassVar
+from typing import ClassVar, Iterable
 
 _MAGIC = b"EHS1"
 _REGISTRY: dict[bytes, type] = {}
@@ -43,6 +45,15 @@ class MergeableSketch:
     @classmethod
     def _from_payload(cls, payload: bytes) -> "MergeableSketch":
         raise NotImplementedError
+
+    def merge_blobs(self, blobs: Iterable[bytes]) -> "MergeableSketch":
+        """Merge serialized sketches into this one, left to right in the
+        order given; returns the merged sketch.  Families with a faster
+        blob-level fan-in (CMS) override this."""
+        sk = self
+        for blob in blobs:
+            sk = sk.merge(from_bytes(blob))
+        return sk
 
     # --- framing --------------------------------------------------------
     def to_bytes(self) -> bytes:

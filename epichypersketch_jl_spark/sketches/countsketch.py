@@ -125,12 +125,6 @@ class CountSketch(MergeableSketch):
             _n_updates=self.n_updates + other.n_updates,
         )
 
-    def merge_inplace(self, other: "CountSketch") -> "CountSketch":
-        self._compat(other)
-        self.table += other.table
-        self.n_updates += other.n_updates
-        return self
-
     def subtract(self, other: "CountSketch") -> "CountSketch":
         """Signed DIFFERENCE sketch: estimates of (self - other) are
         unbiased estimates of the per-key frequency difference — the

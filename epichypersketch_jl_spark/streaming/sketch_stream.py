@@ -22,8 +22,7 @@ from pyspark.sql import functions as F
 from ..config import HyperSketchConfig
 from ..functions.motif_kernels import make_cms
 from ..operators.motif import _is_conv, _make_update_fn, _prepared
-from ..operators.sketch_build import BLOB_SCHEMA, _make_build_fn
-from ..sketches.base import from_bytes
+from ..operators.sketch_build import BLOB_SCHEMA, _build_task, _merge_rows, _per_task
 from ..sketches.cms import CountMinSketch
 
 
@@ -55,7 +54,7 @@ class StreamingAnySketchJob:
         return batch_df
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        fn = _make_build_fn(self.zero_fn, self.update_fn)
+        fn = _per_task(_build_task(self.zero_fn, self.update_fn))
         (
             self._prepare(batch_df)
             .mapInArrow(fn, BLOB_SCHEMA)
@@ -98,10 +97,7 @@ class StreamingAnySketchJob:
             return self.zero_fn()
         if not rows:
             return self.zero_fn()
-        sk = from_bytes(bytes(rows[0].sketch))
-        for r in rows[1:]:
-            sk = sk.merge(from_bytes(bytes(r.sketch)))
-        return sk
+        return _merge_rows(rows)
 
 
 class StreamingSketchJob(StreamingAnySketchJob):

@@ -97,8 +97,8 @@ class TestCMS:
         assert r == c and r.n_updates == c.n_updates
         assert (r.estimate(np.array([[1, 2]])) == np.array([2])).all()
 
-    def test_merge_blob_inplace_equals_object_merge(self):
-        """The blob-level fan-in fast path must be byte-identical to
+    def test_merge_blobs_equals_object_merge(self):
+        """The blob-level fan-in path must be byte-identical to
         merge_inplace(from_bytes(blob)) across every serialized dtype tier
         (int16 / int32 / int64 partial counts)."""
         rng = np.random.default_rng(7)
@@ -115,16 +115,16 @@ class TestCMS:
             ).merge_inplace(a).merge_inplace(from_bytes(blob))
             got = CountMinSketch(
                 delta=0.01, epsilon=0.001, key_width=2, seed=5
-            ).merge_inplace(a).merge_blob_inplace(blob)
+            ).merge_inplace(a).merge_blobs([blob])
             assert got == want and got.n_updates == want.n_updates
 
-    def test_merge_blob_inplace_incompatible_raises(self):
+    def test_merge_blobs_incompatible_raises(self):
         a = CountMinSketch(key_width=2, seed=1)
         b = CountMinSketch(key_width=2, seed=2)
         with pytest.raises(ValueError):
-            a.merge_blob_inplace(b.to_bytes())
+            a.merge_blobs([b.to_bytes()])
         with pytest.raises(ValueError):
-            a.merge_blob_inplace(b"garbage")
+            a.merge_blobs([b"garbage"])
 
 
 # --------------------------------------------------------------------- HLL
